@@ -91,17 +91,21 @@ def _polygon_layer(spark: SparkSession) -> DataFrame:
     if key not in _LAYER_CACHE:
         # deterministic fixture layer → persist once per machine (content is
         # a pure function of the seed/config; benches reuse across sessions).
-        # Cache key includes a fingerprint of the geometry-pipeline sources so
-        # code changes invalidate it; OSPM_LAYER_CACHE=0 disables entirely.
+        # Cache key is a fingerprint of every package source file, so no
+        # code change can serve a stale layer; OSPM_LAYER_CACHE=0 disables
+        # the cache entirely.
         import hashlib
 
         pkg = os.path.join(os.path.dirname(os.path.abspath(__file__)), "osm_public_space_mapper_spark")
         hasher = hashlib.sha1()
-        for rel in ("operators/overlay_core.py", "plans/pipeline.py", "geo/raster.py",
-                    "geo/kernels.py", "geo/laea.py", "geo/offset.py", "fixtures/elements.py",
-                    "functions/classify.py", "functions/predicates.py", "operators/barriers.py"):
-            with open(os.path.join(pkg, rel), "rb") as fh:
-                hasher.update(fh.read())
+        for root, dirs, files in os.walk(pkg):
+            dirs.sort()
+            for name in sorted(files):
+                if name.endswith(".py"):
+                    path = os.path.join(root, name)
+                    hasher.update(os.path.relpath(path, pkg).encode())
+                    with open(path, "rb") as fh:
+                        hasher.update(fh.read())
         tag = hasher.hexdigest()[:10]
         cache_path = os.path.join(tempfile.gettempdir(), f"ospm_layer_{tag}.parquet")
         if os.environ.get("OSPM_LAYER_CACHE", "1") == "0":

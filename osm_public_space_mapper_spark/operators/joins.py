@@ -1,11 +1,24 @@
 """J12/J13 — the flagship image-side spatial joins (north rule).
 
-J12 point-in-polygon assignment: geo-tagged image rows (lon/lat derived from
-phash bits, FIXTURES.md §2) are bucketed by fine cell; the classified polygon
-layer is exploded onto the cells its bbox covers; equi-join on cell, then an
-Arrow-vectorized PIP refine per cell group. No broadcast of either side — the
-shuffle key is the cell id, skew handled by AQE + optional salting of dense
-cells (see bench).
+J12 point-in-polygon assignment has two implementations:
+
+* ``pip_join`` — exact vector PIP: images and the polygon layer exploded
+  onto its covering cells are cogrouped on the cell key and refined with a
+  vectorized ring test per cell group. It is the vector reference the
+  raster answers are checked against.
+* ``mask_join`` — the mask-lookup core: image rows equi-join the class
+  masks of their res-``group_res`` subcell (``subdivide_tiles`` rows) and
+  keep the rows whose mask bit under the point is set, all in Catalyst
+  expressions (no Python worker). Two thin wrappers choose the join
+  strategy for their lane (partitioned vs broadcast, after *To Partition,
+  or Not to Partition*, SIGMOD 2021):
+  - ``pip_join_raster`` is the batch lane: a partitioned shuffle-hash join,
+    because the image side is unbounded and skewed and the north rule is
+    broadcast-free; both sides hash on the group key, so tables bucketed by
+    ``tile_cell`` join with zero Exchange, and salting splits dense cells.
+  - ``streaming.geofence.pip_join_expr`` is the streaming lane: the static
+    mask side is small once subdivided, so it is broadcast and each
+    micro-batch is geofenced map-side without shuffling the stream.
 
 J13 kNN: k nearest walkable-space centroids per image via cell-ring candidate
 generation (ring join) + window `row_number() ≤ k` — SURVEY.md §2.5 J13/§2.7.
@@ -18,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -130,31 +143,26 @@ def pip_join(images: DataFrame, layer: DataFrame, res: int = JOIN_RES_DEFAULT) -
     return imgs.groupBy("cell").cogroup(polys.groupBy("cell")).applyInPandas(_refine, _PIP_OUT)
 
 
-_PIP_RASTER_OUT = T.StructType(
-    [
-        T.StructField("image_id", T.StringType()),
-        T.StructField("space_category", T.StringType()),
-        T.StructField("access", T.StringType()),
-        T.StructField("tile_cell", T.LongType()),
-    ]
-)
-
-
 def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
     """Split per-tile class masks into per-subcell mask slices at `group_res`.
 
     Parallelism of the raster PIP join is bounded by the number of groups;
     coarse tiles (res 10 = 256 m) would cap it at a handful of tasks on a
     small extent. Slicing each mask to its res-`group_res` descendants keeps
-    total payload constant while multiplying group count by 4^(Δres)."""
-    from ..cells.grid import cell_bbox as cell_bbox_np
+    total payload constant while multiplying group count by 4^(Δres); with
+    `group_res` equal to the tile res each non-empty tile is one slice.
 
+    Each slice carries its packed mask twice: ``mask`` (row-major,
+    MSB-first ``np.packbits``) and ``mask_words``, the same bit stream as
+    big-endian int64 words (bit i is bit ``63 - i%64`` of word ``i//64``),
+    which ``mask_word_bit`` reads with plain array indexing."""
     out_schema = T.StructType(
         [
             T.StructField("tile_cell", T.LongType()),
             T.StructField("space_category", T.StringType()),
             T.StructField("access", T.StringType()),
             T.StructField("mask", T.BinaryType()),
+            T.StructField("mask_words", T.ArrayType(T.LongType())),
             T.StructField("mask_w", T.IntegerType()),
             T.StructField("mask_h", T.IntegerType()),
             T.StructField("ox", T.DoubleType()),
@@ -183,10 +191,16 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
                         sub_ix = (int(ix[0]) << shift) | sx
                         sub_iy = (int(iy[0]) << shift) | sy
                         sub_cell = (group_res << 58) | ((sub_ix & ((1 << 29) - 1)) << 29) | (sub_iy & ((1 << 29) - 1))
+                        packed = np.packbits(sub, axis=None).tobytes()
                         out["tile_cell"].append(sub_cell)
                         out["space_category"].append(row["space_category"])
                         out["access"].append(row["access"])
-                        out["mask"].append(np.packbits(sub, axis=None).tobytes())
+                        out["mask"].append(packed)
+                        # zero-pad to whole words; '>i8' reads each 8 bytes
+                        # big-endian as a two's-complement long
+                        out["mask_words"].append(
+                            np.frombuffer(packed + bytes(-len(packed) % 8), dtype=">i8").astype(np.int64)
+                        )
                         out["mask_w"].append(sw)
                         out["mask_h"].append(sh)
                         out["ox"].append(row["ox"] + sx * sw * row["px"])
@@ -199,124 +213,89 @@ def subdivide_tiles(tiles: DataFrame, group_res: int) -> DataFrame:
     ).mapInPandas(_slice, out_schema)
 
 
+def mask_word_bit() -> Column:
+    """Bit (0/1 int) of the class mask under the point ``x, y``, read from
+    the ``mask_words, mask_w, mask_h, ox, oy, px`` columns of a mask row in
+    scope: ``bit = mask[cy*mask_w + cx]`` with ``cx = floor((x-ox)/px)``,
+    ``cy = floor((y-oy)/px)``. NULL outside the mask window, so a plain
+    ``= 1`` filter drops both misses and out-of-window points."""
+    cx, cy = "floor((x - ox) / px)", "floor((y - oy) / px)"
+    i = f"({cy} * mask_w + {cx})"
+    return F.expr(
+        f"""
+        CASE
+          WHEN {cx} >= 0 AND {cx} < mask_w AND {cy} >= 0 AND {cy} < mask_h THEN
+            cast(shiftrightunsigned(
+              element_at(mask_words, cast({i} DIV 64 AS int) + 1),
+              cast(63 - {i} % 64 AS int)
+            ) & 1 AS int)
+        END
+        """
+    )
+
+
+def mask_join(
+    points: DataFrame, masks: DataFrame, group_res: int, cols: list, salt: int = 0
+) -> DataFrame:
+    """Mask-lookup core of both raster PIP lanes (pip_join_raster and the
+    streaming geofence): one row per (point, class mask) whose mask bit
+    under the point is set.
+
+    ``points`` needs projected ``x, y``; ``tile_cell`` is computed at
+    ``group_res`` if absent and REUSED if present, so tables bucketed by
+    tile_cell keep their partitioning. ``cols`` are the point columns to
+    carry (names or aliased Columns); the first is the point id. ``masks``
+    are ``subdivide_tiles`` rows at ``group_res``, with the join-strategy
+    hint already applied by the caller. ``salt > 0`` splits each tile group
+    into ``salt`` sub-groups: points take ``pmod(xxhash64(id), salt)``, mask
+    rows are replicated once per salt id (small after subdivision).
+
+    Output: ``id, space_category, access, tile_cell, *rest of cols`` — layer
+    masks are disjoint, so in practice exactly one row per covered point."""
+    from ..functions.geometry import cell_expr
+
+    if "tile_cell" not in points.columns:
+        points = points.withColumn("tile_cell", cell_expr(group_res)(F.col("x"), F.col("y")))
+    pts = points.select(*cols, "x", "y", "tile_cell")
+    names = pts.columns[: len(cols)]
+    keys = ["tile_cell"]
+    if salt > 0:
+        pts = pts.withColumn("_salt", F.pmod(F.xxhash64(names[0]), F.lit(salt)).cast("int"))
+        masks = masks.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
+        keys.append("_salt")
+    hit = pts.join(masks, keys).where(mask_word_bit() == 1)
+    return hit.select(names[0], "space_category", "access", "tile_cell", *names[1:])
+
+
 def pip_join_raster(
     images: DataFrame,
     tiles: DataFrame,
-    tile_res: int = 10,
     group_res: int = 13,
     salt: int = 0,
     id_col: str = "image_id",
     tiles_subdivided: bool = False,
 ) -> DataFrame:
-    """J12 fast path: assign images via per-tile class-mask lookup.
+    """J12 batch lane: assign images via per-subcell class-mask lookup.
 
-    tiles_subdivided=True declares the mask side is ALREADY at group_res
-    granularity (e.g. a stored `subdivide_tiles` output bucketed by
-    tile_cell) — the slice kernel is skipped so both sides keep their stored
-    partitioning and the whole join plans with zero Exchange
-    (tests/test_bucketed.py asserts this).
+    ``tiles`` are per-tile class masks (``tiling.rasterize_tiles``), sliced
+    here to ``group_res`` by ``subdivide_tiles``. tiles_subdivided=True
+    declares the mask side is ALREADY ``subdivide_tiles`` output at
+    group_res (e.g. a stored table bucketed by tile_cell) — the slice pass
+    is skipped so both sides keep their stored partitioning and the whole
+    join plans with zero Exchange (tests/test_bucketed.py asserts this).
 
     The tile masks are rasterized from the SAME pixel lattice the vector
     layer's rings trace, so a pixel lookup equals the vector PIP answer for
     any point not exactly on a pixel-edge line (measure zero) — verified
-    against both the vector join and the numpy brute force in tests.
+    against both the vector join and a numpy mask lookup in tests.
 
-    Cost per tile group: unpack each class mask once + O(1) per image —
-    independent of polygon complexity. Shuffle key = tile cell; the mask side
-    is hinted shuffle_hash (broadcast-free)."""
-    from ..functions.geometry import cell_expr
-
-    id_type = dict(images.dtypes)[id_col]
-    # x,y are already projected (project_points precondition) — encode the
-    # group cell from them directly instead of re-projecting lon/lat.
-    # A pre-existing tile_cell column is trusted and REUSED: tables bucketed
-    # by tile_cell (tables/bucketed.py) then reach the cogroup with their
-    # bucket partitioning intact → zero Exchange in the plan.
-    if "tile_cell" not in images.columns:
-        images = images.withColumn("tile_cell", cell_expr(group_res)(F.col("x"), F.col("y")))
-    imgs = images.select(
-        F.col(id_col).alias("image_id"), "x", "y", "tile_cell"
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.LongType() if id_type == "bigint" else T.StringType()),
-            T.StructField("space_category", T.StringType()),
-            T.StructField("access", T.StringType()),
-            T.StructField("tile_cell", T.LongType()),
-        ]
-    )
-    t = (
-        subdivide_tiles(tiles, group_res)
-        if group_res > tile_res and not tiles_subdivided
-        else tiles.select(
-            "tile_cell", "space_category", "access", "mask", "mask_w", "mask_h", "ox", "oy", "px"
-        )
-    )
-    group_keys = ["tile_cell"]
-    if salt > 0:
-        # explicit skew salting (north rule): dense urban cells split into
-        # `salt` uniform sub-groups; mask slices replicate per salt id (small
-        # after subdivision), image rows hash-distribute across salt ids
-        # NB: cast both sides to the same type — cogroup keys of differing
-        # integer widths hash-partition differently and silently fail to meet
-        imgs = imgs.withColumn("_salt", F.pmod(F.xxhash64(F.col("image_id")), F.lit(salt)).cast("int"))
-        t = t.withColumn("_salt", F.explode(F.array(*[F.lit(i).cast("int") for i in range(salt)])))
-        group_keys = ["tile_cell", "_salt"]
-
-    import pyarrow as pa
-
-    def _lookup(key, img_tbl: "pa.Table", mask_tbl: "pa.Table") -> "pa.Table":
-        id_pa_type = pa.int64() if id_type == "bigint" else pa.string()
-        empty = pa.table(
-            {
-                "image_id": pa.array([], id_pa_type),
-                "space_category": pa.array([], pa.string()),
-                "access": pa.array([], pa.string()),
-                "tile_cell": pa.array([], pa.int64()),
-            }
-        )
-        if img_tbl.num_rows == 0 or mask_tbl.num_rows == 0:
-            return empty
-        cell = key[0].as_py()
-        px_arr = img_tbl.column("x").to_numpy(zero_copy_only=False)
-        py_arr = img_tbl.column("y").to_numpy(zero_copy_only=False)
-        ids = img_tbl.column("image_id")  # stays Arrow — no python strings
-        masks = mask_tbl.to_pylist()
-        takes, cats, accs = [], [], []
-        for row in sorted(masks, key=lambda r: (r["space_category"], r["access"])):
-            w, h = int(row["mask_w"]), int(row["mask_h"])
-            mask = np.unpackbits(np.frombuffer(row["mask"], dtype=np.uint8), count=w * h).reshape(h, w)
-            cx = np.floor((px_arr - row["ox"]) / row["px"]).astype(np.int64)
-            cy = np.floor((py_arr - row["oy"]) / row["px"]).astype(np.int64)
-            ok = (cx >= 0) & (cx < w) & (cy >= 0) & (cy < h)
-            hit = np.zeros(len(px_arr), dtype=bool)
-            hit[ok] = mask[cy[ok], cx[ok]] > 0
-            if hit.any():
-                sel = np.nonzero(hit)[0]
-                takes.append(sel)
-                cats.append((row["space_category"], len(sel)))
-                accs.append((row["access"], len(sel)))
-        if not takes:
-            return empty
-        idx = pa.array(np.concatenate(takes))
-        out_ids = ids.take(idx)
-        if isinstance(out_ids, pa.ChunkedArray):
-            out_ids = out_ids.combine_chunks()
-        cat_arr = pa.array(np.repeat([c for c, _ in cats], [n for _, n in cats]))
-        acc_arr = pa.array(np.repeat([a for a, _ in accs], [n for _, n in accs]))
-        cell_arr = pa.array(np.full(len(idx), cell, dtype=np.int64))
-        return pa.table(
-            {"image_id": out_ids, "space_category": cat_arr, "access": acc_arr, "tile_cell": cell_arr}
-        )
-
-    # cogroup, not join: each (tile, class) mask crosses the wire once per
-    # tile group instead of once per image row (which would be O(images) ×
-    # 100KB mask payloads). Arrow-native apply: image ids never materialize
-    # as python objects. Both sides shuffle on the group key — broadcast-free.
-    return (
-        imgs.groupBy(*group_keys)
-        .cogroup(t.groupBy(*group_keys))
-        .applyInArrow(_lookup, out_schema)
+    Join strategy: the mask side is hinted shuffle_hash, so both sides hash
+    on the group key and neither is broadcast (north rule: the image side is
+    unbounded); ``salt`` splits dense cells (see ``mask_join``). Output:
+    ``image_id`` (typed as ``id_col``), space_category, access, tile_cell."""
+    masks = tiles if tiles_subdivided else subdivide_tiles(tiles, group_res)
+    return mask_join(
+        images, masks.hint("shuffle_hash"), group_res, [F.col(id_col).alias("image_id")], salt
     )
 
 

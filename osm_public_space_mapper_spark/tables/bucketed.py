@@ -2,7 +2,7 @@
 
 Writing both sides of the hot join bucketed + sorted on the join key makes
 every downstream cell-keyed operation — equi-joins, groupBy-applyInPandas,
-and the PIP cogroup kernel — consume the stored partitioning directly:
+and the raster PIP join — consume the stored partitioning directly:
 `HashPartitioning(bucket key)` satisfies the operators' clustered
 distribution, so the physical plan contains NO Exchange at all. At 10^12
 rows this removes the single biggest cost of the join (shuffling the image

@@ -67,14 +67,22 @@ class IceliteTable:
         base_manifests: list | None = None,
     ) -> dict:
         """Write df partitioned by `partition_col` and atomically commit a
-        new snapshot whose manifest carries per-partition lineage.
+        new snapshot whose manifest carries per-partition lineage (see
+        `_write_files`). An empty df still commits a snapshot."""
+        return self._commit_snapshot(
+            self._write_files(df, partition_col, stage),
+            df.schema.json(), partition_col, stage, mode, base_manifests,
+        )
+
+    def _write_files(self, df, partition_col: str, stage: str) -> list[dict]:
+        """Write df's data files and return their manifest entries.
 
         Single-pass write: each executor task writes its own parquet file(s)
         (the Iceberg writer model — tasks produce data files, the driver
         commits manifest entries) and RETURNS one lineage row per written
-        file (partition, path, row_count, content_hash). The input is
-        scanned exactly once; the r01 version re-read everything it had just
-        written to compute hashes, doubling write-path I/O per commit.
+        file (partition, path, row_count, content_hash), so the input is
+        scanned exactly once. Directories are made by the tasks that write
+        into them, so a write of no rows leaves nothing under data/.
 
         content_hash is an order-insensitive wrap-around SUM of per-row
         hashes (+ the row count in the manifest): unlike bit_xor, duplicate
@@ -83,12 +91,10 @@ class IceliteTable:
         manifest (standard Iceberg orphan semantics)."""
         from pyspark.sql import functions as F
 
-        write_id = uuid.uuid4().hex[:12]
-        out_dir = os.path.join(self.data_dir, write_id)
-        os.makedirs(out_dir, exist_ok=True)
+        out_dir = os.path.join(self.data_dir, uuid.uuid4().hex[:12])
         pcol = partition_col
 
-        def _write_files(batches):
+        def _write_batches(batches):
             import uuid as _uuid
             from hashlib import md5
 
@@ -144,15 +150,20 @@ class IceliteTable:
                     rows["content_hash"].append(int(h.sum(dtype=np.uint64)))
             yield pd.DataFrame(rows)
 
+        # the sort keeps each partition value contiguous within a task (fewer
+        # files per partition), and lets adaptive execution collapse an empty
+        # input to an empty relation, so the Python write stage then launches
+        # no tasks (e.g. a resume whose partitions are all committed)
         lineage_rows = (
             df.repartition(F.col(partition_col))
+            .sortWithinPartitions(F.col(partition_col))
             .mapInPandas(
-                _write_files,
+                _write_batches,
                 "partition string, path string, row_count long, content_hash decimal(20,0)",
             )
             .collect()
         )
-        manifests = [
+        return [
             {
                 "partition": r["partition"],
                 "row_count": int(r["row_count"]),
@@ -162,8 +173,18 @@ class IceliteTable:
             }
             for r in lineage_rows
         ]
-        schema_json = df.schema.json()
 
+    def _commit_snapshot(
+        self,
+        manifests: list[dict],
+        schema_json: str,
+        partition_col: str,
+        stage: str,
+        mode: str = "append",
+        base_manifests: list | None = None,
+    ) -> dict:
+        """Atomically publish a snapshot listing `manifests` on top of the
+        carried-over ones."""
         prev = self.current_metadata()
         snap = self.current_snapshot()
         if base_manifests is not None:
@@ -433,7 +454,11 @@ class IceliteTable:
 
     def commit_resumable(self, df, partition_col: str, stage: str = "default") -> dict:
         """Resume-aware commit: skips partitions already committed for this
-        stage (anti-join on the checkpoint manifest) and appends the rest."""
+        stage (anti-join on the checkpoint manifest) and appends the rest.
+
+        One pass: the write runs once, and when it wrote no rows (every
+        partition already committed) the current snapshot is returned — no
+        new snapshot, no empty data directory."""
         from pyspark.sql import functions as F
 
         done = self.completed_partitions(stage)
@@ -446,6 +471,7 @@ class IceliteTable:
                 F.col(partition_col).cast("string"), F.lit("__HIVE_DEFAULT_PARTITION__")
             )
             df = df.filter(~key.isin(list(done)))
-        if df.isEmpty():
+        manifests = self._write_files(df, partition_col, stage)
+        if not manifests:
             return self.current_snapshot()
-        return self.commit(df, partition_col, stage=stage, mode="append")
+        return self._commit_snapshot(manifests, df.schema.json(), partition_col, stage)

@@ -1,5 +1,5 @@
 """Bucketed co-located PIP join: both sides stored bucketBy(tile_cell) →
-the salted cogroup kernel's physical plan has NO Exchange, and its output
+the raster PIP join's physical plan has NO Exchange, and its output
 equals the shuffle path exactly."""
 
 import pytest
@@ -20,16 +20,16 @@ def tiles_df(fixture_layer):
 
 def test_bucketed_pip_join_no_exchange(spark, tiles_df):
     """Unsalted co-located case: both sides bucketed by tile_cell → the
-    cogroup consumes the stored partitioning, plan has ZERO Exchange.
-    (Salting widens the group key to (tile_cell, _salt), which the mask-side
-    slice kernel can't pre-satisfy — skewed runs keep the small mask side's
+    join consumes the stored partitioning, plan has ZERO Exchange.
+    (Salting widens the join key to (tile_cell, _salt), which the stored
+    mask side can't pre-satisfy — skewed runs keep the small mask side's
     shuffle and still never shuffle wider than the salt fan-out.)"""
     images = joins.with_cells(joins.project_points(joins.with_geotag(synth_images_spark(spark, 20000))))
     images = images_with_tile_cell(images)
 
     save_bucketed(images, "bk_images", "tile_cell", n_buckets=16)
     # store the mask side pre-subdivided at the join granularity so its
-    # bucket layout matches the cogroup key
+    # bucket layout matches the join key
     save_bucketed(joins.subdivide_tiles(tiles_df, 13), "bk_tiles", "tile_cell", n_buckets=16)
 
     bi, bt = spark.table("bk_images"), spark.table("bk_tiles")

@@ -45,6 +45,53 @@ def test_resume_skips_completed(spark, table):
     assert "9" in table.completed_partitions("s2")
 
 
+def _resume_jobs(spark, table, df, group):
+    """commit_resumable(df) → (snapshot, Spark jobs it ran). Adaptive
+    execution submits every shuffle map stage as a job of its own; with it
+    off, one job is one pass over the input."""
+    sc = spark.sparkContext
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "icelite resume")
+    try:
+        snap = table.commit_resumable(df, "part", stage="s1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status tracker is fed by listener events
+    return snap, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_is_single_pass(spark, table):
+    """A resume runs the write once, with no separate emptiness pass. When
+    every partition is already committed it publishes no snapshot and
+    leaves no data directory behind; a resume with one new partition
+    appends only that partition's rows."""
+    import os
+
+    table.commit(_df(spark, 0, 40), "part", stage="s1")
+    history = table.current_metadata()["history"]
+    data_dirs = set(os.listdir(table.data_dir))
+
+    snap, jobs = _resume_jobs(spark, table, _df(spark, 0, 40), "icelite-resume-noop")
+    assert jobs == 1
+    assert table.current_metadata()["history"] == history
+    assert snap["snapshot_id"] == table.current_snapshot()["snapshot_id"]
+    assert set(os.listdir(table.data_dir)) == data_dirs
+
+    # ids 40..44 land in the committed partitions, 45..49 in new partition "x"
+    more = _df(spark, 0, 50).withColumn(
+        "part", F.when(F.col("id") >= 45, F.lit("x")).otherwise(F.col("part"))
+    )
+    snap, jobs = _resume_jobs(spark, table, more, "icelite-resume-one")
+    assert jobs == 1
+    new = [m for m in snap["manifests"] if m["partition"] not in {"0", "1", "2", "3"}]
+    assert {m["partition"] for m in new} == {"x"}
+    assert sum(m["row_count"] for m in new) == 5
+    assert table.read(spark).count() == 45
+    assert len(table.current_metadata()["history"]) == len(history) + 1
+
+
 def test_lineage_hash_is_content_addressed(spark, table):
     table.commit(_df(spark, 0, 40), "part", stage="a")
     h1 = {m["partition"]: m["content_hash"] for m in table.lineage()}

@@ -79,6 +79,74 @@ def test_pip_raster_equals_vector(spark, layer_df, images_df):
     assert raster == vector
 
 
+@pytest.fixture(scope="module")
+def tiles_df(layer_df):
+    return tiling.rasterize_tiles(layer_df, tile_res=10, px=0.25).cache()
+
+
+def _mask_lookup_oracle(images, tiles, id_col):
+    """numpy reference for the raster join, independent of its Catalyst
+    core: unpack every tile mask and index it at the pixel
+    ``floor((x-ox)/px), floor((y-oy)/px)`` under each image."""
+    pts = images.select(id_col, "x", "y").toPandas()
+    ids, xs, ys = pts[id_col].to_numpy(), pts["x"].to_numpy(), pts["y"].to_numpy()
+    out = set()
+    for t in tiles.collect():
+        w, h = t.mask_w, t.mask_h
+        mask = np.unpackbits(np.frombuffer(t.mask, dtype=np.uint8), count=w * h).reshape(h, w)
+        cx = np.floor((xs - t.ox) / t.px).astype(np.int64)
+        cy = np.floor((ys - t.oy) / t.px).astype(np.int64)
+        ok = (cx >= 0) & (cx < w) & (cy >= 0) & (cy < h)
+        hit = np.zeros(len(xs), dtype=bool)
+        hit[ok] = mask[cy[ok], cx[ok]] > 0
+        out |= {(i, t.space_category, t.access) for i in ids[hit].tolist()}
+    return out
+
+
+@pytest.mark.parametrize(
+    "salt, id_col, group_res",
+    [(0, "image_id", 13), (8, "image_id", 13), (8, "image_key", 13), (0, "image_id", 10)],
+)
+def test_pip_raster_matches_mask_oracle(spark, images_df, tiles_df, salt, id_col, group_res):
+    """pip_join_raster equals a numpy lookup in the unsliced tile masks —
+    salted and unsalted, for string and bigint ids, and with the join cells
+    at the tile resolution (one slice per tile)."""
+    from pyspark.sql import functions as F
+
+    images = images_df.withColumn("image_key", F.xxhash64("image_id"))
+    assigned = joins.pip_join_raster(images, tiles_df, group_res=group_res, salt=salt, id_col=id_col)
+    assert dict(assigned.dtypes)["image_id"] == dict(images.dtypes)[id_col]
+    got = [(r.image_id, r.space_category, r.access) for r in assigned.collect()]
+    assert len(got) == len(set(got)) == N_IMAGES
+    assert set(got) == _mask_lookup_oracle(images, tiles_df, id_col)
+
+
+def test_pip_raster_plan_is_broadcast_free(spark, images_df, tiles_df, tmp_path):
+    """North rule: the raster join never broadcasts and runs no Python
+    cogroup or eval node; its only Python node is subdivide_tiles'
+    MapInPandas, and a pre-subdivided mask side has none. Inputs are read
+    back from parquet so cached upstream plans stay out of the plan."""
+    import re
+
+    images_df.select("image_id", "x", "y").write.parquet(str(tmp_path / "pts"))
+    tiles_df.write.parquet(str(tmp_path / "tiles"))
+    joins.subdivide_tiles(tiles_df, 13).write.parquet(str(tmp_path / "sub"))
+    pts = spark.read.parquet(str(tmp_path / "pts"))
+    for masks, subdivided, python_nodes in (
+        ("tiles", False, {"MapInPandas"}),
+        ("sub", True, set()),
+    ):
+        assigned = joins.pip_join_raster(
+            pts, spark.read.parquet(str(tmp_path / masks)), salt=8, tiles_subdivided=subdivided
+        )
+        # collected first, so the executed plan is the final adaptive one
+        assert len(assigned.collect()) == N_IMAGES
+        plan = assigned._jdf.queryExecution().executedPlan().toString()
+        for node in ("BroadcastExchange", "BroadcastHashJoin"):
+            assert node not in plan, plan
+        assert set(re.findall(r"\b\w*(?:Python|Pandas|Arrow)\b", plan)) == python_nodes, plan
+
+
 def test_pip_assignment_distribution(spark, layer_df, images_df):
     assigned = joins.pip_join(images_df, layer_df)
     counts = {(r.space_category, r.access): r.n for r in

@@ -451,10 +451,11 @@ def _geofence_points(spark, n=900, seed=23):
 
 
 def test_geofence_expr_matches_raster_batch(spark, fixture_layer, tmp_path):
-    """pip_join_expr (pure-Catalyst mask bit test) must reproduce the Arrow
-    cogroup kernel's assignments exactly — same lattice, same MSB-first
-    packbits indexing — and, fed pre-projected points from storage, its
-    plan must contain no Python eval at all."""
+    """pip_join_expr (the broadcast lane) must reproduce the batch
+    pip_join_raster's assignments exactly — both wrap one mask-lookup core,
+    so this pins the two lanes' plumbing, not the bit test (the numpy oracle
+    in tests/test_image_joins.py does that) — and, fed pre-projected points
+    from storage, its plan must contain no Python eval at all."""
     from osm_public_space_mapper_spark.operators import joins, tiling
     from osm_public_space_mapper_spark.streaming.geofence import pip_join_expr
 
