@@ -99,16 +99,6 @@ def set_traffic_space_type(df: DataFrame) -> DataFrame:
 
 from ..config import VIENNA, RegionalConfig  # noqa: E402  (regional width tables)
 
-# Back-compat aliases: the Vienna tables are also the reference's literal
-# constants; swap regions by passing a RegionalConfig, not by editing these.
-HIGHWAY_DEFAULT_WIDTHS = VIENNA.highway_default_widths
-CYCLEWAY_DEFAULT_WIDTHS = VIENNA.cycleway_default_widths
-HIGHWAY_TYPES_WITH_PARKING = list(VIENNA.highway_types_with_parking)
-DEFAULT_PARKING_WIDTH = VIENNA.default_parking_width
-PEDESTRIAN_WAY_DEFAULT_WIDTH = VIENNA.pedestrian_way_default_width
-TRAM_WIDTH = VIENNA.tram_width
-TRAIN_WIDTH = VIENNA.train_width
-
 
 def road_width(region: RegionalConfig | None = None) -> Column:
     """Estimated road width expression under `region`'s width tables
@@ -158,11 +148,6 @@ def road_width(region: RegionalConfig | None = None) -> Column:
         F.expr("try_cast(tags['width'] as double)"),
         width,
     )
-
-
-def buffer_distance(region: RegionalConfig | None = None) -> Column:
-    """round(width/2, 1) — analyse_traffic_area.py:167."""
-    return F.round(road_width(region) / 2.0, 1)
 
 
 def set_missing_space_types(df: DataFrame) -> DataFrame:
@@ -269,15 +254,3 @@ def unassumed_access_warnings(df: DataFrame) -> DataFrame:
         .withColumn("warning", F.lit("no access categorized"))
     )
 
-
-def recode_categories_post_overlay(df: DataFrame) -> DataFrame:
-    """walking area→open space, inaccessible enclosed→undefined space,
-    rail/road→traffic area (reference clean_data.py:352-358)."""
-    c = F.col("space_category")
-    return df.withColumn(
-        "space_category",
-        F.when(c == "walking area", "open space")
-        .when(c == "inaccessible enclosed area", "undefined space")
-        .when(c.isin("rail", "road"), "traffic area")
-        .otherwise(c),
-    )

@@ -1,12 +1,14 @@
 """Geometry pandas UDFs — Arrow-vectorized, one numpy call per batch.
 
-st_project / st_unproject: EPSG:4326 ↔ EPSG:3035
-  (reference clean_data.py:117-126, export_data.py:33-39 via pyproj)
+st_project: EPSG:4326 → EPSG:3035
+  (reference clean_data.py:117-126 via pyproj)
 st_bbox: per-row bbox struct — sargable prefilter for bbox crop / cell cover
   (reference clean_data.py:366-370)
 st_area: shoelace area (reference significance thresholds,
   analyse_access.py:247-248,331)
-cell_of_point / cells_of_bbox: cell-index encode for join bucketing.
+cell_expr / lonlat_cell_udf / cells_covering_bbox_udf: cell-index encode for
+  join bucketing.
+st_buffer_udf: vector-band buffer (geo/offset.py).
 """
 
 from __future__ import annotations
@@ -18,9 +20,8 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..cells.grid import encode_cells
-from ..geo.arrowgeom import flat_to_list, row_point_offsets, series_to_flat
-from ..geo.laea import laea_forward, laea_inverse
-from ..geo.kernels import ring_signed_area
+from ..geo.arrowgeom import flat_to_list, series_to_flat
+from ..geo.laea import laea_forward
 
 GEOM_TYPE = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))
 BBOX_TYPE = T.StructType(
@@ -39,18 +40,6 @@ def st_project(geom: pd.Series) -> pd.Series:
     if coords.shape[0]:
         x, y = laea_forward(coords[:, 0], coords[:, 1])
         coords = np.stack([x, y], axis=1)
-    out = flat_to_list(coords, po, qo)
-    res = pd.Series(out, index=geom.index)
-    res[geom.isna()] = None
-    return res
-
-
-@pandas_udf(GEOM_TYPE)
-def st_unproject(geom: pd.Series) -> pd.Series:
-    coords, po, qo = series_to_flat(geom)
-    if coords.shape[0]:
-        lon, lat = laea_inverse(coords[:, 0], coords[:, 1])
-        coords = np.stack([lon, lat], axis=1)
     out = flat_to_list(coords, po, qo)
     res = pd.Series(out, index=geom.index)
     res[geom.isna()] = None
@@ -102,18 +91,8 @@ def st_area(geom: pd.Series) -> pd.Series:
     return pd.Series(out, index=geom.index)
 
 
-def cell_udf(res: int):
-    """Point cell-encode UDF factory: (x, y) LAEA metres → int64 cell id."""
-
-    @pandas_udf(T.LongType())
-    def _cell(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(encode_cells(x.to_numpy(), y.to_numpy(), res), index=x.index)
-
-    return _cell
-
-
 def cell_expr(res: int):
-    """Pure-Catalyst twin of `cell_udf`: (x, y) LAEA metres → int64 cell id
+    """Pure-Catalyst cell encode: (x, y) LAEA metres → int64 cell id
     with NO Python boundary. Same arithmetic as cells.grid.encode_cells —
     FLOOR(double/double) is IEEE-identical in numpy and whole-stage codegen,
     and the mask/shift layout is the same two's-complement int64 math — so
@@ -263,39 +242,3 @@ def st_buffer_udf(dist: float, cap_style: str = "round", join_style: str = "roun
 
     return _buf
 
-
-def st_clip_convex_udf(window_ring: "list[list[float]]"):
-    """geom (+ geom_kind) → geometry clipped to a CONVEX window ring at
-    VECTOR precision (Sutherland–Hodgman for rings, Liang–Barsky for
-    polylines — geo/kernels.clip_ring_convex/clip_path_convex). The exact
-    payload-path counterpart of the overlay kernel's raster J10 crop
-    (reference crop_defined_space_to_bounding_box, clean_data.py:365-398):
-    output vertices are input vertices and true edge-intersection points,
-    no raster lattice. Polygon parts are clipped per ring (intersection
-    with a convex set distributes over exterior∖holes); empty parts drop;
-    a fully-clipped geometry becomes an empty parts array."""
-    from ..geo.kernels import clip_path_convex, clip_ring_convex
-
-    win = np.asarray(window_ring, dtype=np.float64)
-
-    @pandas_udf(GEOM_TYPE)
-    def _clip(geom: pd.Series, kind: pd.Series) -> pd.Series:
-        out = []
-        for parts, k in zip(geom, kind):
-            part_list = [] if parts is None else list(parts)
-            res = []
-            is_line = k in ("linestring", "multilinestring")
-            for p in part_list:
-                arr = np.asarray([np.asarray(q, dtype=np.float64) for q in p])
-                if len(arr) < 2:
-                    continue
-                if is_line:
-                    res.extend(sub.tolist() for sub in clip_path_convex(arr, win))
-                else:
-                    c = clip_ring_convex(arr, win)
-                    if len(c):
-                        res.append(c.tolist())
-            out.append(res)
-        return pd.Series(out, index=geom.index)
-
-    return _clip

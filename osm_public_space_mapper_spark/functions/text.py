@@ -3,7 +3,7 @@
 All pure Catalyst expressions (JVM-side, no UDFs): token counting
 (whitespace + word-regex), quality scoring (length/punctuation/stopword
 ratios), n-gram language heuristic, document fingerprinting (md5 — portable
-to the DuckDB oracle), shingling for MinHash/Jaccard dedup.
+to the DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -97,16 +97,6 @@ def doc_fingerprint(text: Column) -> Column:
     text — portable (identical in Spark and DuckDB)."""
     norm = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
     return F.md5(norm)
-
-
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of the normalized text (array<string>)."""
-    words = F.split(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "), " ")
-    count = F.greatest(F.size(words) - F.lit(n - 1), F.lit(0))
-    idx = F.sequence(F.lit(0), count - 1)
-    return F.when(count <= 0, F.array().cast("array<string>")).otherwise(
-        F.transform(idx, lambda i: F.concat_ws(" ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)]))
-    )
 
 
 def winnow_fingerprints(df, k: int = 8, w: int = 16):

@@ -70,11 +70,6 @@ def row_bbox(series: pd.Series) -> np.ndarray:
     return out
 
 
-def parts_of_row(series_values: list, idx: int) -> list[np.ndarray]:
-    """One row's parts as list of (K,2) ndarrays (test/oracle helper)."""
-    return [np.asarray(p, dtype=np.float64) for p in series_values[idx]]
-
-
 def np_parts(geom) -> list[np.ndarray]:
     """Nested Arrow list values (possibly ragged object arrays) →
     list of (K,2) float64 arrays."""

@@ -216,51 +216,3 @@ def pieces_mask(grid, pieces: list[np.ndarray], out: "np.ndarray | None" = None)
         mask[ymin : ymax + 1, xmin : xmax + 1] |= inside
     return mask
 
-
-def dilate_rings_mask(
-    grid,
-    mask: np.ndarray,
-    rings: list[np.ndarray],
-    dist: float,
-    join_style: str = "mitre",
-    miter_limit: float = MITER_LIMIT_DEFAULT,
-) -> np.ndarray:
-    """mask ∪ vector-join boundary band — shapely buffer(+dist, join_style)
-    of the polygon whose filled raster is `mask` and whose rings are given
-    in vector form (so diagonal edges dilate by exactly `dist`, not the
-    r·√2 a square structuring element adds at 45°)."""
-    pieces: list[np.ndarray] = []
-    for r in rings:
-        pieces.extend(boundary_band_pieces(r, dist, join_style, miter_limit))
-    return mask | pieces_mask(grid, pieces)
-
-
-def erode_rings_mask(
-    grid,
-    mask: np.ndarray,
-    rings: list[np.ndarray],
-    dist: float,
-    join_style: str = "mitre",
-    miter_limit: float = MITER_LIMIT_DEFAULT,
-) -> np.ndarray:
-    """mask \\ vector-join boundary band — shapely buffer(−dist)."""
-    pieces: list[np.ndarray] = []
-    for r in rings:
-        pieces.extend(boundary_band_pieces(r, dist, join_style, miter_limit))
-    return mask & ~pieces_mask(grid, pieces)
-
-
-def rasterize_lines_vector(
-    grid,
-    paths: list[np.ndarray],
-    width: float,
-    cap_style: str = "flat",
-    join_style: str = "round",
-) -> np.ndarray:
-    """Vector-piece line buffering with explicit cap AND join styles; the
-    join-style-aware sibling of raster.rasterize_lines (which models
-    shapely's default round joins via vertex discs)."""
-    pieces: list[np.ndarray] = []
-    for p in paths:
-        pieces.extend(buffer_line_pieces(np.asarray(p), width / 2.0, cap_style, join_style))
-    return pieces_mask(grid, pieces)

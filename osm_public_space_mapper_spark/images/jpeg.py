@@ -41,7 +41,6 @@ ZIGZAG = np.array(
     ],
     dtype=np.int64,
 )
-_UNZIGZAG = np.argsort(ZIGZAG)
 
 _LUM_Q = np.array(
     [

@@ -35,11 +35,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cells.grid import RES_FINE
+from ..cells.grid import RES_COARSE
 from ..fixtures.elements import BBOX_4326
 from ..functions.geometry import cells_covering_bbox_udf, st_bbox
 from ..geo.arrowgeom import np_parts
-from ..geo.kernels import points_in_polygon, ring_signed_area
+from ..geo.kernels import points_in_polygon
 
 JOIN_RES_DEFAULT = 12  # 64 m join buckets
 KNN_RES_DEFAULT = 9    # 512 m kNN candidate cells
@@ -63,8 +63,9 @@ def with_geotag(images: DataFrame) -> DataFrame:
     )
 
 
-def with_cells(images: DataFrame, res: int = JOIN_RES_DEFAULT, coarse_res: int = 7) -> DataFrame:
-    """Attach join cell + coarse partition-pruning cell (cell7).
+def with_cells(images: DataFrame) -> DataFrame:
+    """Attach the join cell (``cell``, at JOIN_RES_DEFAULT) + the coarse
+    partition-pruning cell (``cell7``, at RES_COARSE).
 
     Precondition: projected ``x, y`` are present (``project_points`` — every
     caller already runs it first). Encoding from x/y in pure Catalyst
@@ -73,17 +74,18 @@ def with_cells(images: DataFrame, res: int = JOIN_RES_DEFAULT, coarse_res: int =
     ArrowEvalPython node from every image-table build."""
     from ..functions.geometry import cell_expr
 
-    cell = cell_expr(res)
-    cell7 = cell_expr(coarse_res)
+    cell = cell_expr(JOIN_RES_DEFAULT)
+    cell7 = cell_expr(RES_COARSE)
     return images.withColumn("cell", cell(F.col("x"), F.col("y"))).withColumn(
         "cell7", cell7(F.col("x"), F.col("y"))
     )
 
 
-def explode_layer_to_cells(layer: DataFrame, res: int = JOIN_RES_DEFAULT) -> DataFrame:
-    """Polygon layer rows → one row per covering join cell, with a
-    deterministic polygon_id (stable across partitionings)."""
-    cover = cells_covering_bbox_udf(res, halo=0)
+def explode_layer_to_cells(layer: DataFrame) -> DataFrame:
+    """Polygon layer rows → one row per covering join cell (JOIN_RES_DEFAULT,
+    the res of ``with_cells``' image ``cell``), with a deterministic
+    polygon_id (stable across partitionings)."""
+    cover = cells_covering_bbox_udf(JOIN_RES_DEFAULT, halo=0)
     out = layer.withColumn(
         "polygon_id", F.xxhash64(F.col("overlay_cell"), F.col("space_category"), F.col("access"))
     )
@@ -105,7 +107,7 @@ _PIP_OUT = T.StructType(
 )
 
 
-def pip_join(images: DataFrame, layer: DataFrame, res: int = JOIN_RES_DEFAULT) -> DataFrame:
+def pip_join(images: DataFrame, layer: DataFrame) -> DataFrame:
     """Assign each image to the polygon covering it (J12).
 
     Plan: COGROUP images and exploded polygons on the cell key, refine with a
@@ -115,7 +117,7 @@ def pip_join(images: DataFrame, layer: DataFrame, res: int = JOIN_RES_DEFAULT) -
     exactly once. Broadcast-free by construction — both sides shuffle on the
     cell key only."""
     imgs = images.select("image_id", "x", "y", "cell")
-    polys = explode_layer_to_cells(layer, res).select(
+    polys = explode_layer_to_cells(layer).select(
         "cell", "polygon_id", "space_category", "access", "geom"
     )
 
@@ -273,14 +275,13 @@ def pip_join_raster(
     group_res: int = 13,
     salt: int = 0,
     id_col: str = "image_id",
-    tiles_subdivided: bool = False,
 ) -> DataFrame:
     """J12 batch lane: assign images via per-subcell class-mask lookup.
 
     ``tiles`` are per-tile class masks (``tiling.rasterize_tiles``), sliced
-    here to ``group_res`` by ``subdivide_tiles``. tiles_subdivided=True
-    declares the mask side is ALREADY ``subdivide_tiles`` output at
-    group_res (e.g. a stored table bucketed by tile_cell) — the slice pass
+    here to ``group_res`` by ``subdivide_tiles``. A frame that already
+    carries ``mask_words`` IS ``subdivide_tiles`` output (taken to be at
+    group_res, e.g. a stored table bucketed by tile_cell): the slice pass
     is skipped so both sides keep their stored partitioning and the whole
     join plans with zero Exchange (tests/test_bucketed.py asserts this).
 
@@ -293,7 +294,7 @@ def pip_join_raster(
     on the group key and neither is broadcast (north rule: the image side is
     unbounded); ``salt`` splits dense cells (see ``mask_join``). Output:
     ``image_id`` (typed as ``id_col``), space_category, access, tile_cell."""
-    masks = tiles if tiles_subdivided else subdivide_tiles(tiles, group_res)
+    masks = tiles if "mask_words" in tiles.columns else subdivide_tiles(tiles, group_res)
     return mask_join(
         images, masks.hint("shuffle_hash"), group_res, [F.col(id_col).alias("image_id")], salt
     )

@@ -47,10 +47,6 @@ def _varint(buf: bytes, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-def _zigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def _fields(buf: bytes):
     """Yield (field_number, value) — value is int for varint fields, bytes
     for length-delimited fields. fixed32/64 skipped (unused by OSM PBF)."""

@@ -11,11 +11,10 @@ equi-join, so the SAME operator runs unchanged under Structured Streaming:
 a stream of geo-tagged image rows is geofenced against the classified
 public-space layer with no state store and no watermark.
 
-Join strategy: broadcast by default. The static mask side is subdivided
-to ``group_res`` (a res-13 mask is a few KB) and read from a stored
+Join strategy: broadcast. The static mask side is subdivided to
+``group_res`` (a res-13 mask is a few KB) and read from a stored
 ``subdivide_tiles`` table, so it fits the broadcast, and each micro-batch
-is then geofenced map-side without shuffling the stream
-(``broadcast_tiles=False`` shuffle-hash joins instead). Unbounded batch
+is then geofenced map-side without shuffling the stream. Unbounded batch
 image tables go through ``pip_join_raster``, whose partitioned join keeps
 the north rule's broadcast-free plan.
 """
@@ -24,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["pip_join_expr", "geofence_stream"]
+__all__ = ["pip_join_expr"]
 
 
 def pip_join_expr(
@@ -33,7 +32,6 @@ def pip_join_expr(
     group_res: int = 13,
     id_col: str = "image_id",
     passthrough: tuple[str, ...] = (),
-    broadcast_tiles: bool = True,
 ) -> DataFrame:
     """Expression-only point-in-mask assignment.
 
@@ -50,31 +48,5 @@ def pip_join_expr(
     """
     from ..operators.joins import mask_join
 
-    masks = F.broadcast(tiles_sub) if broadcast_tiles else tiles_sub.hint("shuffle_hash")
-    return mask_join(points, masks, group_res, [id_col, *passthrough])
+    return mask_join(points, F.broadcast(tiles_sub), group_res, [id_col, *passthrough])
 
-
-def geofence_stream(
-    points_stream: DataFrame,
-    tiles_sub: DataFrame,
-    group_res: int = 13,
-    id_col: str = "image_id",
-    passthrough: tuple[str, ...] = ("event_time",),
-) -> DataFrame:
-    """Geofence a point stream against the classified layer.
-
-    ``points_stream``: streaming frame with projected ``x, y`` (+ any
-    ``passthrough`` columns, e.g. the event time).  ``tiles_sub``: STATIC
-    subdivided mask frame (read from a stored table; see pip_join_expr
-    note).  Returns a streaming frame of class assignments — stateless, so
-    any output mode works and batch equality is exact (asserted vs
-    ``pip_join_raster`` through an availableNow memory sink in
-    tests/test_streaming.py).
-    """
-    return pip_join_expr(
-        points_stream,
-        tiles_sub,
-        group_res=group_res,
-        id_col=id_col,
-        passthrough=passthrough,
-    )

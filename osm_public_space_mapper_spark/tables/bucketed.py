@@ -42,11 +42,3 @@ def save_bucketed(df: DataFrame, table_name: str, key: str = "tile_cell",
         .saveAsTable(table_name)
     )
 
-
-def images_with_tile_cell(images: DataFrame, group_res: int = 13) -> DataFrame:
-    """Stamp the PIP group key so the stored layout matches the join."""
-    from pyspark.sql import functions as F
-
-    from ..functions.geometry import cell_expr
-
-    return images.withColumn("tile_cell", cell_expr(group_res)(F.col("x"), F.col("y")))

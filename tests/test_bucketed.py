@@ -7,10 +7,11 @@ from pyspark.sql import functions as F
 
 from osm_public_space_mapper_spark.fixtures.elements import BBOX_4326, elements_to_spark
 from osm_public_space_mapper_spark.fixtures.images import synth_images_spark
+from osm_public_space_mapper_spark.functions.geometry import cell_expr
 from osm_public_space_mapper_spark.operators import joins, tiling
 from osm_public_space_mapper_spark.operators.overlay_core import OverlayConfig
 from osm_public_space_mapper_spark.plans.pipeline import projected_bbox_ring, run_pipeline
-from osm_public_space_mapper_spark.tables.bucketed import images_with_tile_cell, save_bucketed
+from osm_public_space_mapper_spark.tables.bucketed import save_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +26,7 @@ def test_bucketed_pip_join_no_exchange(spark, tiles_df):
     mask side can't pre-satisfy — skewed runs keep the small mask side's
     shuffle and still never shuffle wider than the salt fan-out.)"""
     images = joins.with_cells(joins.project_points(joins.with_geotag(synth_images_spark(spark, 20000))))
-    images = images_with_tile_cell(images)
+    images = images.withColumn("tile_cell", cell_expr(13)(F.col("x"), F.col("y")))
 
     save_bucketed(images, "bk_images", "tile_cell", n_buckets=16)
     # store the mask side pre-subdivided at the join granularity so its
@@ -33,7 +34,7 @@ def test_bucketed_pip_join_no_exchange(spark, tiles_df):
     save_bucketed(joins.subdivide_tiles(tiles_df, 13), "bk_tiles", "tile_cell", n_buckets=16)
 
     bi, bt = spark.table("bk_images"), spark.table("bk_tiles")
-    assigned = joins.pip_join_raster(bi, bt, salt=0, tiles_subdivided=True)
+    assigned = joins.pip_join_raster(bi, bt, salt=0)
     plan = assigned._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan[:2000]
     assert "Bucketed: true" in plan, plan[:2000]

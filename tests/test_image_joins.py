@@ -29,7 +29,7 @@ def images_df(spark):
     df = images_to_spark(spark, pdf)
     df = joins.with_geotag(df)
     df = joins.project_points(df)
-    df = joins.with_cells(df, res=joins.JOIN_RES_DEFAULT)
+    df = joins.with_cells(df)
     return df.cache()
 
 
@@ -124,27 +124,30 @@ def test_pip_raster_matches_mask_oracle(spark, images_df, tiles_df, salt, id_col
 def test_pip_raster_plan_is_broadcast_free(spark, images_df, tiles_df, tmp_path):
     """North rule: the raster join never broadcasts and runs no Python
     cogroup or eval node; its only Python node is subdivide_tiles'
-    MapInPandas, and a pre-subdivided mask side has none. Inputs are read
-    back from parquet so cached upstream plans stay out of the plan."""
+    MapInPandas, and a pre-subdivided mask side (recognised by its
+    mask_words column) has none and gives the same assignments. Inputs are
+    read back from parquet so cached upstream plans stay out of the plan."""
     import re
 
     images_df.select("image_id", "x", "y").write.parquet(str(tmp_path / "pts"))
     tiles_df.write.parquet(str(tmp_path / "tiles"))
     joins.subdivide_tiles(tiles_df, 13).write.parquet(str(tmp_path / "sub"))
     pts = spark.read.parquet(str(tmp_path / "pts"))
-    for masks, subdivided, python_nodes in (
-        ("tiles", False, {"MapInPandas"}),
-        ("sub", True, set()),
+    outputs = []
+    for masks, python_nodes in (
+        ("tiles", {"MapInPandas"}),
+        ("sub", set()),
     ):
-        assigned = joins.pip_join_raster(
-            pts, spark.read.parquet(str(tmp_path / masks)), salt=8, tiles_subdivided=subdivided
-        )
+        assigned = joins.pip_join_raster(pts, spark.read.parquet(str(tmp_path / masks)), salt=8)
         # collected first, so the executed plan is the final adaptive one
-        assert len(assigned.collect()) == N_IMAGES
+        rows = assigned.collect()
+        assert len(rows) == N_IMAGES
+        outputs.append({tuple(r) for r in rows})
         plan = assigned._jdf.queryExecution().executedPlan().toString()
         for node in ("BroadcastExchange", "BroadcastHashJoin"):
             assert node not in plan, plan
         assert set(re.findall(r"\b\w*(?:Python|Pandas|Arrow)\b", plan)) == python_nodes, plan
+    assert outputs[0] == outputs[1]
 
 
 def test_pip_assignment_distribution(spark, layer_df, images_df):
@@ -333,8 +336,8 @@ def test_jpeg_rows_hold_lossy_invariant(spark):
 
 def test_cell_expr_matches_encode_cells(spark):
     # r06: the pure-Catalyst cell encoder must be bit-identical to the
-    # numpy encode_cells the pandas UDF wrapped — including negative
-    # coordinates (two's-complement masking) and cell-edge floors
+    # numpy encode_cells — including negative coordinates (two's-complement
+    # masking) and cell-edge floors
     import numpy as np
 
     from osm_public_space_mapper_spark.cells.grid import encode_cells

@@ -442,10 +442,10 @@ def _geofence_points(spark, n=900, seed=23):
     df = images_to_spark(spark, pdf)
     df = joins.with_geotag(df)
     df = joins.project_points(df)
-    from osm_public_space_mapper_spark.functions.geometry import cell_udf
+    from osm_public_space_mapper_spark.functions.geometry import cell_expr
     from pyspark.sql import functions as F
 
-    return df.withColumn("tile_cell", cell_udf(13)(F.col("x"), F.col("y"))).select(
+    return df.withColumn("tile_cell", cell_expr(13)(F.col("x"), F.col("y"))).select(
         "image_id", "x", "y", "tile_cell"
     )
 
@@ -484,7 +484,7 @@ def test_geofence_stream_matches_batch(spark, fixture_layer, tmp_path):
     from pyspark.sql import types as T
 
     from osm_public_space_mapper_spark.operators import joins, tiling
-    from osm_public_space_mapper_spark.streaming.geofence import geofence_stream, pip_join_expr
+    from osm_public_space_mapper_spark.streaming.geofence import pip_join_expr
 
     pts = _geofence_points(spark, n=700, seed=29)
     src = tmp_path / "pts"
@@ -508,7 +508,7 @@ def test_geofence_stream_matches_batch(spark, fixture_layer, tmp_path):
         .option("recursiveFileLookup", "true")
         .parquet(str(src))
     )
-    out = geofence_stream(stream, sub, passthrough=())
+    out = pip_join_expr(stream, sub)
     q = (
         out.writeStream.format("memory")
         .queryName("geofence")
